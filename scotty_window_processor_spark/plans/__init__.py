@@ -7,58 +7,59 @@ the kernel-backed multi-window operator (``scotty_batch``) and the
 multimodal stubs — always Arrow-batched per key group, never per row.
 """
 
+from __future__ import annotations
 
-def shuffle_partitions(spark) -> int:
-    """``spark.sql.shuffle.partitions`` as an int, tolerating non-numeric
-    values (e.g. ``"auto"`` under Databricks auto-optimized shuffle)."""
+from py4j.protocol import Py4JError
+
+ROWS_PER_TASK = 262144  # BENCH/bucket_sizing.md
+_BUCKET_CAP = 32768  # stage task-count ceiling
+
+
+def wave_buckets(rows: int | None, cores: int) -> int:
+    """Bucket count for ``rows`` input rows on ``cores`` cores: the fewest
+    whole waves of ``cores`` tasks that keep each task at or under
+    ``ROWS_PER_TASK`` rows, capped at ``_BUCKET_CAP``. Unknown (``None``)
+    or empty inputs get one wave."""
+    waves = max(1, -(-(rows or 0) // (cores * ROWS_PER_TASK)))
+    return min(cores * waves, _BUCKET_CAP)
+
+
+def _plan_rows(df) -> int | None:
+    """Row count of ``df`` from its optimized plan's statistics (no job): the
+    leaf's exact ``rowCount`` when only Project/Filter nodes sit above it (a
+    loaded cache reports one, while the pruning Project above it drops it;
+    with a Filter it is an upper bound), else sizeInBytes over a calibrated
+    ~4 compressed bytes per column per row (string-keyed parquet transcripts
+    measure 13.8 B/row across 3 columns), else None."""
     try:
-        return int(spark.conf.get("spark.sql.shuffle.partitions", "64"))
-    except ValueError:
-        return spark.sparkContext.defaultParallelism or 64
-
-
-_BUCKET_CAP = 32768  # stage task-count ceiling; override via buckets=
+        plan = df._jdf.queryExecution().optimizedPlan()
+        leaf = plan
+        while leaf.nodeName() in ("Project", "Filter"):
+            leaf = leaf.child()
+        if leaf.children().isEmpty():
+            count = leaf.stats().rowCount()
+            if count.isDefined():
+                return int(count.get())
+        size = int(plan.stats().sizeInBytes())
+    except Py4JError:
+        return None
+    if size <= 0 or size > 1 << 55:  # unstatted plans report a huge sentinel
+        return None
+    return size // (4 * max(len(df.columns), 4))
 
 
 def adaptive_buckets(df) -> int:
-    """Bucket count for the Python-tier shuffle, sized so each task carries
-    roughly one TARGET UNIT of rows — max(spark.sql.execution.arrow
-    .maxRecordsPerBatch, 65536) — instead of inheriting
-    spark.sql.shuffle.partitions. Under a small maxRecordsPerBatch config
-    a task therefore carries SEVERAL Arrow batches (the 65536-row floor
-    is the real task-size target, keeping tiny-batch configs from
-    exploding the task count); at the bench's 262144-row batches it is
-    one batch per task.
+    """Bucket count for the Python-tier shuffle: ``wave_buckets`` of the
+    input's plan-statistics row count on ``defaultParallelism`` cores.
 
-    Why: the Python tiers are CPU/Arrow-bound, not shuffle-byte-bound —
-    the right task size is ~one Arrow batch, far SMALLER than AQE's
-    64 MB byte advisory. Measured on the 64M-turn flagship at local[16]:
-    32 buckets (the old cpus×2 formula) = 49.7 s; 256 buckets (= rows /
-    maxRecordsPerBatch) = 20.6 s — 2.4×. At local[4] the same change is
-    103→54 s, so the win is task sizing, not parallelism.
-
-    The row count comes from driver-side plan statistics (no job):
-    optimizedPlan sizeInBytes over a calibrated ~4 compressed bytes per
-    column per row (string-keyed parquet transcripts measure 13.8 B/row
-    across 3 columns). Precision is not needed — the wall-time curve is
-    flat within 2× of the optimum — so the estimate only has to land the
-    right order of magnitude. Clamped to [max(shuffle.partitions,
-    defaultParallelism), 32768]; at 100 TB the cap keeps the stage under
-    ~32k tasks (pass ``buckets=`` explicitly to override either way).
+    Why whole waves of cores, each task up to ~256k rows: on a 4-core
+    host a Python task pays a fixed ~0.3 s (worker set-up, about half of
+    it pyspark's per-task ``importlib.invalidate_caches()``) whatever its
+    size, so the fewest tasks that still fill every core win — 4 buckets
+    instead of 22 ran the benchmark's ``batch_windows`` (440k turns) at
+    526k against 208k turns/s. The per-task row target stays because one
+    wave stops winning once tasks grow far past it (17.6M turns: 64
+    buckets 12.3 s, 16 buckets 17.0 s, 4 buckets out of memory on a 2 GiB
+    heap). Sweep: BENCH/bucket_sizing.md.
     """
-    spark = df.sparkSession
-    lo = max(shuffle_partitions(spark), spark.sparkContext.defaultParallelism or 1)
-    try:
-        size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:
-        return lo
-    if size <= 0 or size > 1 << 55:  # unstatted plans report a huge sentinel
-        return lo
-    rows_est = size // (4 * max(len(df.columns), 4))
-    try:
-        batch = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch", "10000"))
-    except ValueError:
-        batch = 10000
-    target = max(batch, 65536)  # tiny-batch configs should not explode task count
-    want = -(-rows_est // target)
-    return int(min(max(lo, want), _BUCKET_CAP))
+    return wave_buckets(_plan_rows(df), df.sparkSession.sparkContext.defaultParallelism)

@@ -15,10 +15,11 @@ Segment math (rows pre-sorted by key, ts):
 - count tumbling: positional index within key // n, kernel flush
   semantics (windows with end <= key_total+1).
 
-Scale: bucket count = shuffle partitions; each bucket is independent, so
-the stage parallelizes across executors/Python workers with no skew
-sensitivity beyond the hash (a single hot key still lands in one bucket —
-route truly hot keys through plans.skew salting first).
+Scale: bucket count = plans.adaptive_buckets (whole waves of cores, each
+task up to ~256k rows); each bucket is independent, so the stage
+parallelizes across executors/Python workers with no skew sensitivity
+beyond the hash (a single hot key still lands in one bucket — route truly
+hot keys through plans.skew salting first).
 
 Emission parity with the slicing kernel is pinned by
 tests/test_scotty_batch_spark.py (same rows as the kernel tier).
@@ -46,7 +47,7 @@ from ..functions import (
     MinAggregation,
     SumAggregation,
 )
-from . import adaptive_buckets
+from .. import plans  # plans.adaptive_buckets is read per call, so it can be patched
 from ..operators.windows import SessionWindow, SlidingWindow, TumblingWindow, WindowMeasure
 
 
@@ -191,7 +192,6 @@ def multikey_window_aggregate(
     windows: Sequence,
     aggs: Sequence,
     arrival_order: str | None = None,
-    buckets: int | None = None,
 ) -> DataFrame:
     """Bucketed multi-key vectorized windowed aggregation (see module doc)."""
     key_field = df.schema[key]
@@ -261,10 +261,10 @@ def multikey_window_aggregate(
     needed = [key, ts, value] + ([arrival_order] if arrival_order else [])
     sort_cols = [key, ts] + ([arrival_order] if arrival_order else [])
     pruned = df.select(*needed)
-    # task size ≈ one Arrow batch, NOT spark.sql.shuffle.partitions — the
-    # Arrow/numpy stage is CPU-bound, so undersized bucket counts serialize
-    # it (measured 2.4×, see plans.adaptive_buckets)
-    n_buckets = buckets or adaptive_buckets(pruned)
+    # whole waves of cores, NOT spark.sql.shuffle.partitions — each Python
+    # task pays a fixed set-up cost, so extra waves cost more than they
+    # parallelize (see plans.adaptive_buckets)
+    n_buckets = plans.adaptive_buckets(pruned)
     prepared = (
         pruned
         .repartition(n_buckets, F.col(key))

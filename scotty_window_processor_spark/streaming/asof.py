@@ -127,8 +127,9 @@ def _make_handler(
                     buf = None
 
         has_buf = buf is not None and len(buf) > 0
-        # keep us precision internally; truncate only where the GroupState
-        # API requires ms (timers, and the ms-granular TTL comparison)
+        # keep us precision internally; only the GroupState timers are
+        # truncated to ms (the API requires it) — the TTL comparison below
+        # is exact to the us
         last_r_us = (
             int(last_r[ts].to_numpy().astype("datetime64[us]").astype("int64")[0])
             if last_r is not None
