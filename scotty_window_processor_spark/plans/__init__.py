@@ -24,13 +24,30 @@ def wave_buckets(rows: int | None, cores: int) -> int:
     return min(cores * waves, _BUCKET_CAP)
 
 
+def shuffle_partitions(spark) -> int:
+    """``spark.sql.shuffle.partitions`` as an int, tolerating non-numeric
+    values (e.g. ``"auto"`` under Databricks auto-optimized shuffle)."""
+    try:
+        return int(spark.conf.get("spark.sql.shuffle.partitions", "64"))
+    except ValueError:
+        return spark.sparkContext.defaultParallelism or 64
+
+
+def _byte_rows(df, plan) -> int | None:
+    """Rows estimated from ``plan``'s sizeInBytes over a calibrated ~4
+    compressed bytes per column per row (string-keyed parquet transcripts
+    measure 13.8 B/row across 3 columns); None for unstatted plans."""
+    size = int(plan.stats().sizeInBytes())
+    if size <= 0 or size > 1 << 55:  # unstatted plans report a huge sentinel
+        return None
+    return size // (4 * max(len(df.columns), 4))
+
+
 def _plan_rows(df) -> int | None:
     """Row count of ``df`` from its optimized plan's statistics (no job): the
     leaf's exact ``rowCount`` when only Project/Filter nodes sit above it (a
     loaded cache reports one, while the pruning Project above it drops it;
-    with a Filter it is an upper bound), else sizeInBytes over a calibrated
-    ~4 compressed bytes per column per row (string-keyed parquet transcripts
-    measure 13.8 B/row across 3 columns), else None."""
+    with a Filter it is an upper bound), else ``_byte_rows``, else None."""
     try:
         plan = df._jdf.queryExecution().optimizedPlan()
         leaf = plan
@@ -40,17 +57,15 @@ def _plan_rows(df) -> int | None:
             count = leaf.stats().rowCount()
             if count.isDefined():
                 return int(count.get())
-        size = int(plan.stats().sizeInBytes())
+        return _byte_rows(df, plan)
     except Py4JError:
         return None
-    if size <= 0 or size > 1 << 55:  # unstatted plans report a huge sentinel
-        return None
-    return size // (4 * max(len(df.columns), 4))
 
 
 def adaptive_buckets(df) -> int:
-    """Bucket count for the Python-tier shuffle: ``wave_buckets`` of the
-    input's plan-statistics row count on ``defaultParallelism`` cores.
+    """Bucket count for the vectorized tier's shuffle (``vectorized_multi``):
+    ``wave_buckets`` of the input's plan-statistics row count on
+    ``defaultParallelism`` cores.
 
     Why whole waves of cores, each task up to ~256k rows: on a 4-core
     host a Python task pays a fixed ~0.3 s (worker set-up, about half of
@@ -63,3 +78,32 @@ def adaptive_buckets(df) -> int:
     heap). Sweep: BENCH/bucket_sizing.md.
     """
     return wave_buckets(_plan_rows(df), df.sparkSession.sparkContext.defaultParallelism)
+
+
+def kernel_buckets(df) -> int:
+    """Bucket count for the kernel tier's shuffle (``scotty_batch``): about
+    ``max(spark.sql.execution.arrow.maxRecordsPerBatch, 65536)`` rows per
+    task by ``_byte_rows``, clamped to [max(shuffle.partitions,
+    defaultParallelism), 32768].
+
+    The kernel tier does not use ``adaptive_buckets``: its per-row cost is
+    ~100x the vectorized tier's, so the fixed per-task cost that whole
+    waves save is a small share of each task, and whole waves were slower
+    on every kernel input timed where the two rules differ
+    (BENCH/bucket_sizing.md, "Kernel tier"). A row target measured for
+    this tier should replace this rule.
+    """
+    spark = df.sparkSession
+    lo = max(shuffle_partitions(spark), spark.sparkContext.defaultParallelism or 1)
+    try:
+        rows = _byte_rows(df, df._jdf.queryExecution().optimizedPlan())
+    except Py4JError:
+        return lo
+    if rows is None:
+        return lo
+    try:
+        batch = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch", "10000"))
+    except ValueError:
+        batch = 10000
+    target = max(batch, 65536)  # tiny-batch configs should not explode task count
+    return int(min(max(lo, -(-rows // target)), _BUCKET_CAP))

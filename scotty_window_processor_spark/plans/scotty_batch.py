@@ -40,7 +40,7 @@ from ..functions import (
     QuantileAggregation,
     SumAggregation,
 )
-from .. import plans  # plans.adaptive_buckets is read per call, so it can be patched
+from .. import plans  # plans.kernel_buckets is read per call, so it can be patched
 from ..operators.kernel import SlicingWindowOperator
 from ..operators.windows import SessionWindow, SlidingWindow, TumblingWindow, Window, WindowMeasure
 
@@ -219,9 +219,9 @@ def scotty_window_aggregate(
     if value is not None:
         # column-prune before the shuffle: payload columns never cross Arrow
         df = df.select(*dict.fromkeys([key, ts, value] + ([arrival_order] if arrival_order else [])))
-    # whole waves of cores, each task up to ~256k rows
-    # (plans.adaptive_buckets) — every Python task pays a fixed set-up cost
-    n_buckets = plans.adaptive_buckets(df)
+    # ~65k rows per task, at least shuffle.partitions (plans.kernel_buckets):
+    # the kernel stage is CPU-bound Python, so a few large tasks serialize it
+    n_buckets = plans.kernel_buckets(df)
     # explicit repartition(num, col) pins the bucket shuffle: its
     # REPARTITION_BY_NUM origin is exempt from AQE partition coalescing,
     # which would otherwise size the CPU-bound Python kernel stage by

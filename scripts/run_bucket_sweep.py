@@ -1,26 +1,31 @@
-"""Bucket-count sweep for the Python tiers' shuffle (``plans.adaptive_buckets``).
+"""Bucket-count sweep for the Python tiers' shuffle (``plans.adaptive_buckets``
+for the vectorized tier, ``plans.kernel_buckets`` for the kernel tier).
 
-Runs the benchmark's ``batch_windows`` query (vectorized tier: tumbling 10m
-+ 1h and session 5m, count + sum; ``perfbench/batch.py``) at multiples of
-its input. Conversations and hot conversations scale together, so 1x, 10x
-and 40x are 440k, 4.4M and 17.6M turns. For each point it prints the
-bucket count used, the median wall time of the timed iterations (plan +
-``noop`` write, after one untimed warm-up iteration) and the peak resident
-memory of the process tree (this interpreter, the JVM and the Python
-workers, read before the check). Every point's output is then checked
-against one Catalyst groupBy per window family (``perfbench.batch
-.check_output``), untimed.
+Runs one of the benchmark's batch queries (``perfbench/batch.py``) at
+multiples of its input; conversations and hot conversations scale together:
+
+- ``batch_windows`` (vectorized tier: tumbling 10m + 1h and session 5m,
+  count + sum): 1x, 10x and 40x are 440k, 4.4M and 17.6M turns;
+- ``batch_kernel`` (slicing-kernel tier: sliding 1h/1min and session 5m,
+  count + histogram quantile): 1x, 10x and 40x are 44k, 440k and 1.76M
+  turns.
+
+For each point it prints the bucket count used, the median wall time of the
+timed iterations (plan + ``noop`` write, after one untimed warm-up
+iteration) and the peak resident memory of the process tree (this
+interpreter, the JVM and the Python workers, read before the check). Every
+point's output is then checked against one Catalyst groupBy per window
+family (``perfbench.batch.check_output``), untimed.
 
 ``--buckets`` takes ``auto`` (the engine's own choice) and/or forced
-counts; a forced count replaces ``plans.adaptive_buckets`` in the child
-process, so both Python tiers use it. Each point runs in a fresh
-subprocess under the benchmark's session configuration
-(``perfbench.host``: ``local[nproc]``, 2 GiB JVM heap), so its peak
-memory and JVM state are its own; a point that fails (for example out of
-memory) is reported and the sweep goes on.
+counts; a forced count replaces the query's sizing rule in ``plans`` in the
+child process. Each point runs in a fresh subprocess under the benchmark's
+session configuration (``perfbench.host``: ``local[nproc]``, 2 GiB JVM
+heap), so its peak memory and JVM state are its own; a point that fails
+(for example out of memory) is reported and the sweep goes on.
 
-Usage: python scripts/run_bucket_sweep.py [--scales 1,10,40] [--buckets auto,4,64]
-           [--seed 1] [--iterations 8]
+Usage: python scripts/run_bucket_sweep.py [--query batch_windows|batch_kernel]
+           [--scales 1,10,40] [--buckets auto,4,64] [--seed 1] [--iterations 8]
 """
 
 from __future__ import annotations
@@ -38,14 +43,18 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+# the sizing rule in ``plans`` that each query's tier reads per call
+SIZING = {"batch_windows": "adaptive_buckets", "batch_kernel": "kernel_buckets"}
 
-def run_point(scale: int, forced: int | None, seed: int, iterations: int, work: str) -> dict:
+
+def run_point(query: str, scale: int, forced: int | None, seed: int, iterations: int,
+              work: str) -> dict:
     """One sweep point, in this process: prints its timing and memory as a
     ``TIMED`` line, then checks the output and returns the check's counts."""
     from perfbench import batch, host
     from scotty_window_processor_spark import plans
 
-    base = batch.BATCH_WINDOWS
+    base = batch.SPECS[query]
     spec = dataclasses.replace(base, n_convs=base.n_convs * scale,
                                n_hot_convs=base.n_hot_convs * scale)
     spark = host.start_session(REPO, work)
@@ -54,8 +63,8 @@ def run_point(scale: int, forced: int | None, seed: int, iterations: int, work: 
         df = spec.synthesize(spark, seed).persist()
         rows = df.count()
         if forced is not None:
-            plans.adaptive_buckets = lambda _df: forced
-        buckets = plans.adaptive_buckets(df.select(batch.KEY, batch.TS, "v"))
+            setattr(plans, SIZING[query], lambda _df: forced)
+        buckets = getattr(plans, SIZING[query])(df.select(batch.KEY, batch.TS, "v"))
         times = []
         for _ in range(iterations + 1):
             t0 = time.perf_counter()
@@ -75,6 +84,7 @@ def run_point(scale: int, forced: int | None, seed: int, iterations: int, work: 
 
 def main():
     ap = argparse.ArgumentParser()
+    ap.add_argument("--query", default="batch_windows", choices=sorted(SIZING))
     ap.add_argument("--scales", default="1,10,40")
     ap.add_argument("--buckets", default="auto",
                     help="comma list of 'auto' and forced bucket counts")
@@ -87,7 +97,7 @@ def main():
         scale, b = args.point.split(",")
         work = os.path.join(REPO, ".perfbench", "bucket_sweep")
         shutil.rmtree(work, ignore_errors=True)
-        r = run_point(int(scale), None if b == "auto" else int(b), args.seed,
+        r = run_point(args.query, int(scale), None if b == "auto" else int(b), args.seed,
                       args.iterations, work)
         shutil.rmtree(work, ignore_errors=True)
         print("RESULT " + json.dumps(r), flush=True)
@@ -100,7 +110,8 @@ def main():
         for b in args.buckets.split(","):
             proc = subprocess.run(
                 [sys.executable, os.path.abspath(__file__), "--point", f"{scale},{b}",
-                 "--seed", str(args.seed), "--iterations", str(args.iterations)],
+                 "--query", args.query, "--seed", str(args.seed),
+                 "--iterations", str(args.iterations)],
                 capture_output=True, text=True,
             )
             out = {l.split(" ", 1)[0]: json.loads(l.split(" ", 1)[1])

@@ -1,5 +1,7 @@
-"""Bucket sizing of the Python tiers' shuffle (plans.adaptive_buckets): whole
-waves of cores from plan statistics, and output independent of the count."""
+"""Bucket sizing of the Python tiers' shuffle: whole waves of cores from plan
+statistics for the vectorized tier (plans.adaptive_buckets), the per-task
+row target with a shuffle-partitions floor for the kernel tier
+(plans.kernel_buckets), and output independent of the count on both."""
 
 import pytest
 
@@ -8,6 +10,7 @@ from pyspark.sql import functions as F
 from scotty_window_processor_spark import plans
 from scotty_window_processor_spark.functions import (
     CountAggregation,
+    HistogramQuantileAggregation,
     MaxAggregation,
     SumAggregation,
 )
@@ -17,6 +20,7 @@ from scotty_window_processor_spark.operators import (
     TumblingWindow,
     WindowMeasure,
 )
+from scotty_window_processor_spark.plans.scotty_batch import scotty_window_aggregate
 from scotty_window_processor_spark.plans.vectorized_multi import multikey_window_aggregate
 from scotty_window_processor_spark.sources import synthesize_transcripts
 
@@ -85,6 +89,33 @@ def test_vectorized_output_is_independent_of_bucket_count(spark, transcripts, mo
         used = []
         monkeypatch.setattr(plans, "adaptive_buckets", lambda d, n=n: used.append(n) or n)
         out = multikey_window_aggregate(df, "conv_id", "ts", "v", windows, aggs)
+        outputs.append(sorted(tuple(r) for r in out.collect()))
+        assert used == [n]
+    assert outputs[0] and outputs[0] == outputs[1]
+
+
+def test_kernel_tier_keeps_the_shuffle_partitions_floor(spark, transcripts):
+    pruned = transcripts.select("conv_id", "ts", "turn_idx")
+    floor = max(int(spark.conf.get("spark.sql.shuffle.partitions")),
+                spark.sparkContext.defaultParallelism)
+    assert plans.kernel_buckets(pruned) == floor
+    assert plans.kernel_buckets(spark.range(0).select("id")) == floor
+
+
+def test_kernel_output_is_independent_of_bucket_count(spark, transcripts, monkeypatch):
+    p = spark.sparkContext.defaultParallelism
+    df = transcripts.withColumn("v", F.length("text").cast("double"))
+    windows = [
+        SlidingWindow(WindowMeasure.TIME, 600_000, 120_000, window_id=1),
+        SessionWindow(WindowMeasure.TIME, 120_000, window_id=2),
+    ]
+    aggs = [("n", "long", CountAggregation),
+            ("p50", "double", lambda: HistogramQuantileAggregation(0.5, 0.25))]
+    outputs = []
+    for n in (p, 3 * p):
+        used = []
+        monkeypatch.setattr(plans, "kernel_buckets", lambda d, n=n: used.append(n) or n)
+        out = scotty_window_aggregate(df, "conv_id", "ts", "v", windows, aggs)
         outputs.append(sorted(tuple(r) for r in out.collect()))
         assert used == [n]
     assert outputs[0] and outputs[0] == outputs[1]
